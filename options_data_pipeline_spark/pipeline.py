@@ -6,7 +6,7 @@ enrichment → dedup write → state snapshot — collapses into two Spark
 programs:
 
  - :func:`run_batch` — one declarative DataFrame chain over a day (or any
-   range) of stored ticks, ending in an idempotent partitioned write.
+   range) of stored ticks, ending in an idempotent append.
    This is the "DataFrame transforms + scheduled jobs" shape from
    BASELINE.json: a scheduler triggers it per session; the calendar gate
    is a job predicate, not dataflow.
@@ -16,7 +16,8 @@ programs:
 Scale: everything between the tick scan and the sink groups/windows by
 symbol — one shuffle into (symbol, window) grain, then symbol-partitioned
 window functions and the ATR grouped-map reuse that partitioning. The
-sink is (year, month)-partitioned so the dedup read prunes.
+batch sink is flat; its dedup read prunes on ``window_start`` parquet
+row-group stats.
 """
 
 from __future__ import annotations
@@ -87,10 +88,15 @@ def run_batch(
     enriched = enrich_candles(
         ticks, interval, interval_seconds, symbols, instruments, cache_handles=handles
     )
+    # cached here, not by the sink, so the state snapshot below reads the
+    # rows the sink's dedup evaluated (the sink leaves a caller's cache)
+    enriched = enriched.cache()
+    handles.append(enriched)
     written = idempotent_append_batch(enriched, sink_path)
     if state_path is not None:
         overwrite_snapshot(atr_summary(enriched), state_path)
-    for h in handles:
+    # newest first, so no cached frame outlives one it was built on
+    for h in reversed(handles):
         h.unpersist()
     return written
 

@@ -13,16 +13,24 @@ The reference's retry ladder (5× exp backoff) and fallback WAL are
 subsumed by Spark task retries + the streaming WAL; the ``atr_state``
 full-overwrite snapshot (S4) maps to ``mode("overwrite")``.
 
-Scale: the sink read for dedup is partition-pruned by the batch's window
-range — never a full-sink scan (the reference's Q2 reads the whole sheet
-per window, SURVEY.md §7 risk 5).
+Scale: the sink read for dedup is pruned to the batch's ``prune_col``
+range — by parquet row-group stats on a flat sink, and by partition
+directory as well when the sink is ``partition_by=("date",)`` — so a
+batch never forces a full-sink scan (the reference's Q2 reads the whole
+sheet per window, SURVEY.md §7 risk 5). The offered batch is evaluated
+once per append: it is cached before the bounds collect, and the
+anti-join, count and write read the cached rows.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+from collections.abc import Callable, Iterator
+from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,6 +49,51 @@ def sink_has_data(sink_path: str) -> bool:
     )
 
 
+@contextlib.contextmanager
+def _dedup_delta(
+    batch: DataFrame,
+    id_col: str,
+    prune_col: str | None,
+    read_sink: Callable[[Any, Any], DataFrame | None],
+) -> Iterator[tuple[DataFrame, int, Any, Any]]:
+    """The shared core of both sink writers: prune bounds → anti-join
+    against the sink → cache → count. Yields ``(delta, n, lo, hi)``; the
+    writer stores ``delta`` inside its ``with`` block.
+
+    ``read_sink(lo, hi)`` returns the sink rows to dedup against, or
+    ``None`` for an empty sink; they are filtered to ``[lo, hi]`` on
+    ``prune_col`` here (a typed filter, so the parquet scan skips row
+    groups by their stats); without ``prune_col`` no bounds are taken.
+
+    The offered plan is evaluated once per call: ``batch`` is cached
+    before its first action, so the bounds collect fills the cache and
+    the anti-join, the count and the write read cached rows. A batch
+    that is already cached belongs to the caller and stays cached; every
+    cache created here is released in ``finally``, also when the write
+    raises."""
+    owned: list[DataFrame] = []
+    try:
+        if batch.storageLevel == StorageLevel.NONE:
+            owned.append(batch.cache())
+        lo = hi = None
+        if prune_col is not None:
+            b = batch.agg(F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")).collect()[0]
+            lo, hi = b.lo, b.hi
+        delta = batch
+        sink = read_sink(lo, hi)
+        if sink is not None:
+            if lo is not None:
+                sink = sink.filter((F.col(prune_col) >= lo) & (F.col(prune_col) <= hi))
+            delta = batch.join(sink.select(id_col), id_col, "left_anti").cache()
+            owned.append(delta)
+        yield delta, delta.count(), lo, hi
+    finally:
+        # newest first: uncaching the batch while the delta built on it
+        # is still cached would make Spark rebuild the delta's cache entry
+        for df in reversed(owned):
+            df.unpersist()
+
+
 def idempotent_append_batch(
     batch: DataFrame,
     sink_path: str,
@@ -50,54 +103,48 @@ def idempotent_append_batch(
 ) -> int:
     """Anti-join ``batch`` against the sink on ``id`` and append the delta.
     Returns rows written. Prunes the sink read to the batch's key range
-    when ``prune_col`` is given; when ``partition_by`` includes a ``date``
-    column the prune bounds also become partition filters so the dedup
-    read touches only the batch's date partitions (never a full-sink
-    scan)."""
-    spark = batch.sparkSession
-    delta = batch
-    if sink_has_data(sink_path):
-        sink = spark.read.parquet(sink_path)
-        if prune_col is not None:
-            bounds = batch.agg(
-                F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")
-            ).collect()[0]
-            if bounds.lo is not None:
-                sink = sink.filter(
-                    (F.col(prune_col) >= bounds.lo) & (F.col(prune_col) <= bounds.hi)
-                )
-                if "date" in partition_by:
-                    sink = sink.filter(
-                        F.col("date").between(
-                            F.lit(bounds.lo).cast("date"),
-                            F.lit(bounds.hi).cast("date"),
-                        )
-                    )
-        delta = batch.join(sink.select(id_col), id_col, "left_anti")
-    delta = delta.cache()
-    n = delta.count()
-    if n:
-        # Atomic-ish append: write the delta to a SIBLING staging dir,
-        # then rename completed part-files into the sink one by one.
-        # A crash mid-write leaves only the staging dir (invisible to sink
-        # reads — no half-written parquet ever corrupts the sink); a crash
-        # mid-promotion leaves some files moved (their ids dedup on
-        # replay) and some staged (invisible, so the replay's anti-join
-        # re-emits exactly those rows). Rename is atomic per file on a
-        # real filesystem; object stores should swap this for a
-        # manifest-commit (or a Delta/Iceberg MERGE) — same contract.
-        import uuid
+    when ``prune_col`` is given (row-group stats); when ``partition_by``
+    includes a ``date`` column the prune bounds also become partition
+    filters so the dedup read touches only the batch's date partitions.
 
-        staging = f"{sink_path.rstrip('/')}.staging-{uuid.uuid4().hex[:12]}"
-        try:
-            writer = delta.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(staging)
-            _promote_staged(staging, sink_path)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-    delta.unpersist()
+    One evaluation per call: the offered plan runs once, however many
+    actions the dedup takes (bounds, anti-join count, write). Cache
+    ownership: a ``batch`` the caller cached stays cached; a cache this
+    call creates is released before it returns or raises."""
+    has_data = sink_has_data(sink_path)
+
+    def read_sink(lo, hi) -> DataFrame | None:
+        if not has_data:
+            return None
+        sink = batch.sparkSession.read.parquet(sink_path)
+        if lo is not None and "date" in partition_by:
+            sink = sink.filter(
+                F.col("date").between(F.lit(lo).cast("date"), F.lit(hi).cast("date"))
+            )
+        return sink
+
+    with _dedup_delta(batch, id_col, prune_col, read_sink) as (delta, n, *_):
+        if n:
+            # Atomic-ish append: write the delta to a SIBLING staging dir,
+            # then rename completed part-files into the sink one by one.
+            # A crash mid-write leaves only the staging dir (invisible to sink
+            # reads — no half-written parquet ever corrupts the sink); a crash
+            # mid-promotion leaves some files moved (their ids dedup on
+            # replay) and some staged (invisible, so the replay's anti-join
+            # re-emits exactly those rows). Rename is atomic per file on a
+            # real filesystem; object stores should swap this for a
+            # manifest-commit (or a Delta/Iceberg MERGE) — same contract.
+            import uuid
+
+            staging = f"{sink_path.rstrip('/')}.staging-{uuid.uuid4().hex[:12]}"
+            try:
+                writer = delta.write.mode("overwrite")
+                if partition_by:
+                    writer = writer.partitionBy(*partition_by)
+                writer.parquet(staging)
+                _promote_staged(staging, sink_path)
+            finally:
+                shutil.rmtree(staging, ignore_errors=True)
     return n
 
 
@@ -311,36 +358,30 @@ def manifest_append_batch(
     single manifest publish. Partition-style layout is deliberately not
     used — segments keep all columns in-data and skipping happens at the
     manifest (segment min/max) and parquet row-group-stat levels, the same
-    posture Delta data skipping takes on object stores."""
-    spark = batch.sparkSession
-    blo = bhi = lo = hi = None
-    if prune_col is not None:
-        b = batch.agg(F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")).collect()[0]
-        blo, bhi = b.lo, b.hi
-        # manifest bounds go through THIS encoder on both the write and
+    posture Delta data skipping takes on object stores. Evaluation and
+    cache ownership as in :func:`idempotent_append_batch`."""
+
+    def read_sink(lo, hi) -> DataFrame | None:
+        # manifest bounds go through _bound_json on both the write and
         # the skip side, so the overlap test is self-consistent and
         # type-aware (native numbers for numerics, ISO strings otherwise)
-        lo, hi = _bound_json(blo), _bound_json(bhi)
-    segments = _committed_segments(sink_path, lo, hi, prune_col=prune_col)
-    delta = batch
-    if segments:
-        sink = spark.read.parquet(*segments)
-        if prune_col is not None and blo is not None:
-            # typed in-data filter (never string-compared) pushes to the
-            # parquet scan and prunes row groups by their stats
-            sink = sink.filter((F.col(prune_col) >= blo) & (F.col(prune_col) <= bhi))
-        delta = batch.join(sink.select(id_col), id_col, "left_anti")
-    delta = delta.cache()
-    n = delta.count()
-    if n:
-        import uuid
-
-        seg_name = uuid.uuid4().hex[:12]
-        delta.write.mode("overwrite").parquet(
-            os.path.join(sink_path, "segments", seg_name)
+        segments = _committed_segments(
+            sink_path, _bound_json(lo), _bound_json(hi), prune_col=prune_col
         )
-        _publish_manifest(sink_path, seg_name, n, lo, hi, prune_col=prune_col)
-    delta.unpersist()
+        return batch.sparkSession.read.parquet(*segments) if segments else None
+
+    with _dedup_delta(batch, id_col, prune_col, read_sink) as (delta, n, lo, hi):
+        if n:
+            import uuid
+
+            seg_name = uuid.uuid4().hex[:12]
+            delta.write.mode("overwrite").parquet(
+                os.path.join(sink_path, "segments", seg_name)
+            )
+            _publish_manifest(
+                sink_path, seg_name, n, _bound_json(lo), _bound_json(hi),
+                prune_col=prune_col,
+            )
     return n
 
 

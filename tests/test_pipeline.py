@@ -8,6 +8,7 @@ from datetime import datetime, timedelta
 
 import pytest
 
+from options_data_pipeline_spark.operators.atr import atr_summary
 from options_data_pipeline_spark.pipeline import run_batch, run_streaming
 
 TICK_SCHEMA = "symbol string, price double, ts timestamp, event_id long"
@@ -44,6 +45,9 @@ def test_batch_pipeline_end_to_end(spark, tmpdir):
     assert {r.symbol for r in st.collect()} == {"A", "B"}
     [a] = st.filter("symbol = 'A'").collect()
     assert a.last_close == 104.0 and a.candle_count == 4
+    # the snapshot summarises exactly the rows the sink holds
+    want = atr_summary(fact).select(st.columns)
+    assert sorted(st.collect()) == sorted(want.collect())
 
 
 def test_batch_pipeline_idempotent_rerun(spark, tmpdir):

@@ -481,13 +481,32 @@ def test_atr_update_handles_multi_chunk_out_of_order_groups():
     assert got["atr"].notna().sum() > 0
 
 
+def one_window(spark, ids):
+    """A batch of ``ids`` all in the 2024-01-01 09:15 window."""
+    return spark.createDataFrame(
+        [(i, 1.0) for i in ids], "id string, v double"
+    ).withColumn("window_start", F.lit("2024-01-01 09:15:00").cast("timestamp"))
+
+
+def assert_sink_cached_nothing(spark, batch):
+    """Nothing a sink writer cached survives it: the offered batch is
+    uncached and the session's cache manager holds no entry."""
+    from pyspark import StorageLevel
+
+    assert batch.storageLevel == StorageLevel.NONE
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_sink_crash_before_promotion_leaves_sink_clean(spark, tmpdir, monkeypatch):
     """A crash after the staging write but before any rename must leave
-    ZERO visible files in the sink — the replay then writes everything."""
+    ZERO visible files in the sink — the replay then writes everything.
+    Neither crash (empty sink: batch cached; non-empty sink: batch and
+    delta cached) may leave a cache behind."""
     import os
 
     from options_data_pipeline_spark.streaming import sink as sink_mod
 
+    spark.catalog.clearCache()
     sink = tmpdir + "/sink"
     batch = spark.createDataFrame(
         [("a", 1.0), ("b", 2.0)], "id string, v double"
@@ -501,9 +520,17 @@ def test_sink_crash_before_promotion_leaves_sink_clean(spark, tmpdir, monkeypatc
         idempotent_append_batch(batch, sink)
     assert not sink_mod.sink_has_data(sink)  # no partial files visible
     assert not [d for d in os.listdir(tmpdir) if ".staging-" in d]  # cleaned
+    assert_sink_cached_nothing(spark, batch)
 
     monkeypatch.undo()
     assert idempotent_append_batch(batch, sink) == 2  # replay writes all
+    assert spark.read.parquet(sink).count() == 2
+
+    later = one_window(spark, ["a", "b", "c"])
+    monkeypatch.setattr(sink_mod, "_promote_staged", boom)
+    with pytest.raises(RuntimeError):
+        idempotent_append_batch(later, sink)
+    assert_sink_cached_nothing(spark, later)
     assert spark.read.parquet(sink).count() == 2
 
 
@@ -614,6 +641,106 @@ def test_manifest_sink_crash_between_write_and_commit(spark, tmpdir, monkeypatch
     removed = sink_mod.gc_uncommitted_segments(sink, grace_s=0)
     assert len(removed) == 1
     assert sink_mod.manifest_sink_read(spark, sink).count() == 3
+
+
+def test_manifest_sink_crash_releases_caches(spark, tmpdir, monkeypatch):
+    """Manifest twin of the rename sink's crash test: a crash before the
+    manifest publish, into an empty and into a non-empty sink, leaves no
+    cache behind."""
+    from options_data_pipeline_spark.streaming import sink as sink_mod
+
+    spark.catalog.clearCache()
+    sink = tmpdir + "/msink"
+
+    def boom(sink_path, segment, n_rows, lo, hi, **kw):
+        raise RuntimeError("crash before manifest publish")
+
+    first, later = one_window(spark, ["a", "b"]), one_window(spark, ["a", "b", "c"])
+    monkeypatch.setattr(sink_mod, "_publish_manifest", boom)
+    with pytest.raises(RuntimeError):
+        sink_mod.manifest_append_batch(first, sink)
+    assert_sink_cached_nothing(spark, first)
+
+    monkeypatch.undo()
+    assert sink_mod.manifest_append_batch(first, sink) == 2
+    monkeypatch.setattr(sink_mod, "_publish_manifest", boom)
+    with pytest.raises(RuntimeError):
+        sink_mod.manifest_append_batch(later, sink)
+    assert_sink_cached_nothing(spark, later)
+    assert sink_mod.manifest_sink_read(spark, sink).count() == 2
+
+
+SINK_WRITERS = ["idempotent_append_batch", "manifest_append_batch"]
+
+
+def sink_read(spark, writer, path):
+    from options_data_pipeline_spark.streaming import sink as sink_mod
+
+    if writer == "manifest_append_batch":
+        return sink_mod.manifest_sink_read(spark, path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("writer", SINK_WRITERS)
+def test_sink_keeps_a_callers_cache(spark, tmpdir, writer):
+    """A batch the caller cached is the caller's: neither the first write
+    (empty sink, no anti-join), the delta write nor the replay may
+    unpersist it, or the caller would silently re-run its plan."""
+    from pyspark import StorageLevel
+
+    from options_data_pipeline_spark.streaming import sink as sink_mod
+
+    append = getattr(sink_mod, writer)
+    sink = tmpdir + "/sink"
+
+    first = one_window(spark, ["a", "b"]).cache()
+    later = one_window(spark, ["b", "c"]).cache()
+    try:
+        assert append(first, sink) == 2
+        assert first.storageLevel != StorageLevel.NONE
+        assert append(later, sink) == 1
+        assert append(later, sink) == 0
+        assert later.storageLevel != StorageLevel.NONE
+        assert sink_read(spark, writer, sink).count() == 3
+    finally:
+        first.unpersist()
+        later.unpersist()
+
+
+@pytest.mark.parametrize("writer", SINK_WRITERS)
+def test_sink_evaluates_the_offered_batch_once_per_call(spark, tmpdir, writer):
+    """The offered plan runs once per append, whatever the dedup's action
+    count: a Python UDF that feeds the prune column counts its rows, and a
+    write plus its replay against a non-empty sink evaluate it exactly
+    rows × 2 times (an uncached batch is evaluated by the bounds collect
+    and again by the anti-join count)."""
+    from options_data_pipeline_spark.streaming import sink as sink_mod
+
+    append = getattr(sink_mod, writer)
+    sink = tmpdir + "/sink"
+    base = datetime(2024, 1, 1, 9, 15)
+    seed = spark.createDataFrame(
+        [(f"s{i}", base + timedelta(minutes=5 * i)) for i in range(3)],
+        "id string, window_start timestamp",
+    )
+    assert append(seed, sink) == 3
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("timestamp")
+    def counted(ts):
+        evaluated.add(1)
+        return ts
+
+    rows = 6
+    batch = spark.createDataFrame(
+        [(f"b{i}", base + timedelta(minutes=5 * i)) for i in range(rows)],
+        "id string, ts timestamp",
+    ).select("id", counted("ts").alias("window_start"))
+    assert append(batch, sink) == rows
+    assert append(batch, sink) == 0
+    assert evaluated.value == rows * 2
+    assert sink_read(spark, writer, sink).count() == 3 + rows
 
 
 def test_manifest_segment_skipping_by_bounds(spark, tmpdir):
