@@ -19,40 +19,13 @@ All built-in Column expressions — no Python UDFs.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: monotonic suffix for driver-loop temp views (the ADVICE-r12 naming
-#: rule: never key session-global view names on id())
-_VIEW_IDS = itertools.count()
-
 from .text import fingerprint_col
-
-
-def _sql_lazy(df: DataFrame, sql_for_view) -> DataFrame:
-    """Build a lazy result as ONE SQL statement over a throwaway view of
-    ``df`` — the r13 construction pattern for builders whose Column form
-    needs hundreds of py4j round trips (the 124-sum simhash agg measured
-    ~2.3 s of pure driver-side construction per bench run). The SQL text
-    spells out the SAME operators in the SAME order as the Column chain it
-    replaces, so plans and results are bit-identical. ``.schema`` forces
-    analysis while the view still exists; after that the returned frame's
-    analyzed plan embeds the resolved subtree, so the view is dropped
-    immediately (no catalog leak, no cross-call collision — monotonic
-    counter names)."""
-    spark = df.sparkSession
-    view = f"__sig_v_{next(_VIEW_IDS)}"
-    df.createOrReplaceTempView(view)
-    try:
-        out = spark.sql(sql_for_view(view))
-        out.schema  # force analysis so the plan survives the view drop
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
 
 
 class _RoundCheckpointer:
@@ -633,7 +606,7 @@ def connected_components_star(
     # string lesson applied to the round body): the Column-built round
     # chain (~40 py4j calls + a window-plan re-analysis per round) was
     # profiled at 4.06 s construct with only 2.3 s of Spark jobs on
-    # dedup_clusters. Each round is now ONE spark.sql over a view of the
+    # dedup_clusters. Each round is now ONE spark.sql over the bound
     # current edge generation — identical operators in identical order
     # (UNION ALL ≡ union, WHERE v > u AND v != m ≡ the filter-project-
     # filter chain, least/min-window/explode/DISTINCT verbatim), so
@@ -643,7 +616,6 @@ def connected_components_star(
     # Exchange per round (guide §2.4) while the row multiset feeding it
     # is bounded by |sym|/2.
     spark = pairs.sparkSession
-    view = f"__cc_star_edges_{next(_VIEW_IDS)}"
     round_sql = (
         "SELECT DISTINCT x AS u, m AS v FROM ("
         " SELECT explode(array(v, u)) AS x, m FROM ("
@@ -651,33 +623,29 @@ def connected_components_star(
         "  SELECT u, v, least(u, min(v) OVER (PARTITION BY u)) AS m FROM ("
         "   SELECT v AS u, m AS v FROM ("
         "    SELECT u, v, least(u, min(v) OVER (PARTITION BY u)) AS m"
-        f"    FROM (SELECT u, v FROM {view}"
-        f"          UNION ALL SELECT v, u FROM {view})"
+        "    FROM (SELECT u, v FROM {edges}"
+        "          UNION ALL SELECT v, u FROM {edges})"
         "   ) WHERE v > u AND v != m"
         "  )"
         " )"
         ") WHERE x != m"
     )
-    try:
-        for _ in range(max_iters):
-            edges.createOrReplaceTempView(view)
-            small_pre, obs = _sig_observe(spark.sql(round_sql))
-            small = ck(small_pre)
-            new_sig = _sig_get(obs)
-            fixpoint = (
-                new_sig == sig
-                and small.join(edges, ["u", "v"], "left_anti").count() == 0
-            )
-            # the anti-join above was this round's last read of the
-            # previous generation — drop it NOW, keeping at most
-            # current + in-flight generations in storage
-            ck.free(edges)
-            edges, sig = small, new_sig
-            if fixpoint:
-                converged = True
-                break
-    finally:
-        spark.catalog.dropTempView(view)
+    for _ in range(max_iters):
+        small_pre, obs = _sig_observe(spark.sql(round_sql, edges=edges))
+        small = ck(small_pre)
+        new_sig = _sig_get(obs)
+        fixpoint = (
+            new_sig == sig
+            and small.join(edges, ["u", "v"], "left_anti").count() == 0
+        )
+        # the anti-join above was this round's last read of the
+        # previous generation — drop it NOW, keeping at most
+        # current + in-flight generations in storage
+        ck.free(edges)
+        edges, sig = small, new_sig
+        if fixpoint:
+            converged = True
+            break
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iters} rounds;"
@@ -793,12 +761,11 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text", bits: int = 32) 
         " ELSE CAST(0 AS BIGINT) END"
         for b in range(bits)
     )
-    return _sql_lazy(
-        docs,
-        lambda view: f"""
+    return docs.sparkSession.sql(
+        f"""
 WITH toks AS (
   SELECT doc_id, tok
-  FROM {view}
+  FROM {{docs}}
   LATERAL VIEW explode(regexp_extract_all(lower({text_col}), '\\\\S+', 0)) _t AS tok
 ),
 hashed AS (
@@ -812,6 +779,7 @@ counts AS (
   FROM hashed GROUP BY doc_id
 )
 SELECT doc_id, CAST(0 AS BIGINT) + {sig} AS simhash FROM counts""",
+        docs=docs,
     )
 
 
@@ -1236,12 +1204,11 @@ def simhash_signatures_2w(
         " ELSE CAST(0 AS BIGINT) END"
         for b in range(62, bits)
     )
-    return _sql_lazy(
-        docs,
-        lambda view: f"""
+    return docs.sparkSession.sql(
+        f"""
 WITH toks AS (
   SELECT doc_id, tok
-  FROM {view}
+  FROM {{docs}}
   LATERAL VIEW explode(regexp_extract_all(lower({text_col}), '\\\\S+', 0)) _t AS tok
 ),
 hashed AS (
@@ -1257,6 +1224,7 @@ counts AS (
 SELECT doc_id, CAST(0 AS BIGINT) + {lo} AS sh_lo,
        CAST(0 AS BIGINT) + {hi} AS sh_hi
 FROM counts""",
+        docs=docs,
     )
 
 

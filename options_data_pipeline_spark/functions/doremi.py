@@ -45,19 +45,18 @@ doubles (k = |domains|). Reference analogue: none — extension track
 
 from __future__ import annotations
 
-import itertools
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: monotonic suffix for driver-loop temp views (the ADVICE-r12 naming
-#: rule: never key session-global view names on id())
-_VIEW_IDS = itertools.count()
-
 #: fixed optimization configuration — part of the cross-engine contract
 ITERS = 8
 ETA = 0.5  # power of two: the excess multiply is exact
+
+#: a source name inside a quoted literal of a spark.sql(..., model=...)
+#: text: quotes doubled for SQL, braces doubled for the format pass
+_SQL_STR_ESC = str.maketrans({"'": "''", "{": "{{", "}": "}}"})
 
 _G12 = Decimal("1e-12")
 _G9 = Decimal("1e-9")
@@ -146,7 +145,10 @@ def doremi_trajectory(
     p) model table. Returns (final weights, final-mixture excess per
     domain as exact DECIMAL, domain entropies H_d as exact DECIMAL —
     negated lneg). The per-iteration Spark job is the module-docstring
-    shape; the driver update mirrors the oracle bit for bit."""
+    shape; the driver update mirrors the oracle bit for bit. Each
+    iteration binds ``model`` into its SQL, and dropping that binding
+    uncaches a ``.cache()``d frame: pass a checkpointed model
+    (:func:`checkpoint_model`)."""
     hneg = {
         r["source"]: r["lneg"]
         for r in _neg_xent(model, F.col("p")).collect()
@@ -158,22 +160,19 @@ def doremi_trajectory(
     # r13 (guide §7.3 driver-side work + §2.4): each iteration used to
     # build the mixture plan through ~30 py4j Column calls and run a
     # tok-grain agg whose result JOINED back onto the model. The model
-    # is STATIC across iterations, so it gets one temp view, and each
-    # iteration is ONE spark.sql: p_mix comes from a sum-window
-    # PARTITION BY tok over the same rows the groupBy+join produced —
-    # per-(source,tok) row set identical, DECIMAL sums order-free, so
-    # lneg per source is bit-identical — and the join is gone (on a
-    # tok-partitioned model the window needs no exchange either).
+    # is STATIC across iterations, and each iteration is ONE spark.sql
+    # over it: p_mix comes from a sum-window PARTITION BY tok over the
+    # same rows the groupBy+join produced — per-(source,tok) row set
+    # identical, DECIMAL sums order-free, so lneg per source is
+    # bit-identical — and the join is gone (on a tok-partitioned model
+    # the window needs no exchange either).
     # Weight literals round-trip exactly (shortest repr + correctly-
-    # rounded parse); source names are SQL-escaped.
+    # rounded parse); source names are escaped (_SQL_STR_ESC).
     spark = model.sparkSession
-    view = f"__doremi_model_{next(_VIEW_IDS)}"
-    model.createOrReplaceTempView(view)
 
     def mix_loss(weights: dict[str, float]) -> dict[str, Decimal]:
         wmap = ", ".join(
-            f"'{s.replace(chr(39), chr(39) * 2)}', {weights[s]!r}D"
-            for s in sources
+            f"'{s.translate(_SQL_STR_ESC)}', {weights[s]!r}D" for s in sources
         )
         # fail-loud underflow guard: when every w_d·p_d(t) term rounds
         # to 0 on the 12-dp grid, p_mix(t) = 0 and ln(0) is NULL —
@@ -189,7 +188,8 @@ def doremi_trajectory(
             " FROM (SELECT source, p,"
             f" sum(CAST(round(map({wmap})[source] * p, 12)"
             " AS DECIMAL(38,12))) OVER (PARTITION BY tok) AS pm"
-            f" FROM {view}) GROUP BY source"
+            " FROM {model}) GROUP BY source",
+            model=model,
         ).collect()
         n_bad = sum(int(r["n_underflow"] or 0) for r in rows)
         if n_bad:
@@ -201,20 +201,17 @@ def doremi_trajectory(
             )
         return {r["source"]: r["lneg"] for r in rows}
 
-    try:
-        for _ in range(iters):
-            lneg = mix_loss(w)
-            u = {}
-            for s in sources:
-                ex = hneg[s] - lneg[s]  # exact DECIMAL: KL on the grid
-                ex_f = float(max(ex, Decimal(0)))
-                u[s] = _q12(w[s] * (1.0 + eta * ex_f))
-            z = sum(u.values())  # exact DECIMAL sum — order-free
-            w = {s: float(_q12(float(u[s]) / float(z))) for s in sources}
+    for _ in range(iters):
+        lneg = mix_loss(w)
+        u = {}
+        for s in sources:
+            ex = hneg[s] - lneg[s]  # exact DECIMAL: KL on the grid
+            ex_f = float(max(ex, Decimal(0)))
+            u[s] = _q12(w[s] * (1.0 + eta * ex_f))
+        z = sum(u.values())  # exact DECIMAL sum — order-free
+        w = {s: float(_q12(float(u[s]) / float(z))) for s in sources}
 
-        final_lneg = mix_loss(w)
-    finally:
-        spark.catalog.dropTempView(view)
+    final_lneg = mix_loss(w)
     excess = {
         s: max(hneg[s] - final_lneg[s], Decimal(0)) for s in sources
     }

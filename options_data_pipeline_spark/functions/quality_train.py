@@ -55,10 +55,6 @@ from pyspark.sql import functions as F
 ITERS = 32
 LR = 8.0  # power of two: the update multiply is exact
 
-#: monotonic suffix for the GD loop's temp view — session-global names
-#: keyed on id() can collide after GC (ADVICE r12 on the kmeans view)
-_VIEW_IDS = __import__("itertools").count()
-
 
 def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """doc_id, x1..x3, y — the training matrix. x1/x2 are dyadic
@@ -148,7 +144,9 @@ def quality_train(
     g = (p − y)·x under the rational squash. Returns the final weights;
     the trajectory is deterministic (see module docstring). ``n_rows``
     (when the caller already knows the row count) skips the compaction
-    decision's count job."""
+    decision's count job. Each iteration binds the table into its SQL,
+    and dropping that binding uncaches a ``.cache()``d frame: pass a
+    checkpointed one, as every caller here does."""
     feats = _gd_table(feats, n_rows)
     # r13 (guide §7.3 driver-side work — the r12 kmeans lesson applied
     # here): each iteration used to build ~40 py4j Column objects and
@@ -164,32 +162,28 @@ def quality_train(
     # back to the same IEEE double, and the D suffix keeps Spark from
     # reading them as DECIMAL.
     spark = feats.sparkSession
-    view = f"__quality_gd_{next(_VIEW_IDS)}"
-    feats.createOrReplaceTempView(view)
     w = [0.0, 0.0, 0.0, 0.0]
-    try:
-        for _ in range(iters):
-            wl = [f"{x!r}D" for x in w]
-            z = f"(({wl[0]} + {wl[1]} * x1) + {wl[2]} * x2) + {wl[3]} * x3"
-            row = spark.sql(
-                "SELECT sum(CAST(round(g, 12) AS DECIMAL(38,12))) AS sb,"
-                " sum(CAST(round(g * x1, 12) AS DECIMAL(38,12))) AS s1,"
-                " sum(CAST(round(g * x2, 12) AS DECIMAL(38,12))) AS s2,"
-                " sum(CAST(round(g * x3, 12) AS DECIMAL(38,12))) AS s3,"
-                " CAST(count(1) AS DOUBLE) AS n FROM ("
-                "SELECT (0.5D + 0.5D * (z / (1.0D + abs(z))))"
-                " - CAST(y AS DOUBLE) AS g, x1, x2, x3 FROM ("
-                f"SELECT {z} AS z, x1, x2, x3, y FROM {view}))"
-            ).collect()[0]
-            n = row["n"]
-            w = [
-                w[0] - lr * (float(row["sb"]) / n),
-                w[1] - lr * (float(row["s1"]) / n),
-                w[2] - lr * (float(row["s2"]) / n),
-                w[3] - lr * (float(row["s3"]) / n),
-            ]
-    finally:
-        spark.catalog.dropTempView(view)
+    for _ in range(iters):
+        wl = [f"{x!r}D" for x in w]
+        z = f"(({wl[0]} + {wl[1]} * x1) + {wl[2]} * x2) + {wl[3]} * x3"
+        row = spark.sql(
+            "SELECT sum(CAST(round(g, 12) AS DECIMAL(38,12))) AS sb,"
+            " sum(CAST(round(g * x1, 12) AS DECIMAL(38,12))) AS s1,"
+            " sum(CAST(round(g * x2, 12) AS DECIMAL(38,12))) AS s2,"
+            " sum(CAST(round(g * x3, 12) AS DECIMAL(38,12))) AS s3,"
+            " CAST(count(1) AS DOUBLE) AS n FROM ("
+            "SELECT (0.5D + 0.5D * (z / (1.0D + abs(z))))"
+            " - CAST(y AS DOUBLE) AS g, x1, x2, x3 FROM ("
+            f"SELECT {z} AS z, x1, x2, x3, y FROM {{feats}}))",
+            feats=feats,
+        ).collect()[0]
+        n = row["n"]
+        w = [
+            w[0] - lr * (float(row["sb"]) / n),
+            w[1] - lr * (float(row["s1"]) / n),
+            w[2] - lr * (float(row["s2"]) / n),
+            w[3] - lr * (float(row["s3"]) / n),
+        ]
     return w
 
 

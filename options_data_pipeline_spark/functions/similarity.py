@@ -19,14 +19,8 @@ Scale design (100 TB / billions of vectors):
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-#: monotonic suffix for driver-loop temp views (ADVICE r12: id()-keyed
-#: names can collide after GC)
-_VIEW_IDS = itertools.count()
 
 
 def dot_col(a: str | Column, b: str | Column) -> Column:
@@ -181,8 +175,6 @@ def rp_lsh_near_dup_pairs(
     # bucket self-join → cosine → DISTINCT → threshold), so plans and
     # results are bit-identical. Plane literals round-trip exactly
     # (shortest-repr + correctly-rounded parse).
-    from .dedupe import _sql_lazy
-
     bit_sql = ",\n         ".join(
         "CASE WHEN "
         + _dot_sql("v", "array(" + ", ".join(_sql_double(w) for w in plane) + ")")
@@ -197,13 +189,12 @@ def rp_lsh_near_dup_pairs(
     )
     stack_args = ", ".join(f"{b}, band{b}" for b in range(bands))
     vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-    return _sql_lazy(
-        vectors,
-        lambda view: f"""
+    return vectors.sparkSession.sql(
+        f"""
 WITH v AS (
   SELECT {id_col} AS vid, {vcast} AS v,
          sqrt({_dot_sql(vcast, vcast)}) AS nrm
-  FROM {view}
+  FROM {{vectors}}
 ),
 sig AS (
   SELECT vid, v, nrm,
@@ -227,6 +218,7 @@ cand AS (
   WHERE a.vid < b.vid
 )
 SELECT id_a, id_b, cosine FROM cand WHERE cosine >= {_sql_double(threshold)}""",
+        vectors=vectors,
     )
 
 
@@ -458,30 +450,22 @@ def kmeans_centroids(
     # py4j call + one parse; the expression tree (argmin string, avg,
     # round) is the same operators in the same order, so the float
     # trajectory — and the oracle hash — is unchanged.
-    # monotonic counter, not id(): id() values can be reused after GC and
-    # the view namespace is session-global, so two interleaved builds
-    # could collide and one's finally-block would drop the other's view
-    # mid-loop (ADVICE r12)
-    view = f"__kmeans_v_{next(_VIEW_IDS)}"
-    v.createOrReplaceTempView(view)
     mean_sql = (
         (lambda d: f"avg(v[{d}]) AS d{d}")
         if round_dp is None
         else (lambda d: f"round(avg(v[{d}]), {int(round_dp)}) AS d{d}")
     )
-    try:
-        for _ in range(iters):
-            argmin = f"array_min({_score_entries_sql('v', centroids)}).cell"
-            means = spark.sql(
-                f"SELECT cell, {', '.join(mean_sql(d) for d in range(dim))}"
-                f" FROM (SELECT {argmin} AS cell, v FROM {view}) GROUP BY cell"
-            ).collect()
-            new_cents = list(centroids)
-            for r in means:
-                new_cents[r["cell"]] = [r[f"d{d}"] for d in range(dim)]
-            centroids = new_cents
-    finally:
-        spark.catalog.dropTempView(view)
+    for _ in range(iters):
+        argmin = f"array_min({_score_entries_sql('v', centroids)}).cell"
+        means = spark.sql(
+            f"SELECT cell, {', '.join(mean_sql(d) for d in range(dim))}"
+            f" FROM (SELECT {argmin} AS cell, v FROM {{v}}) GROUP BY cell",
+            v=v,
+        ).collect()
+        new_cents = list(centroids)
+        for r in means:
+            new_cents[r["cell"]] = [r[f"d{d}"] for d in range(dim)]
+        centroids = new_cents
     return centroids
 
 
@@ -1563,34 +1547,30 @@ def kcenter_coreset(
     # over the same fold dot product, so every distance — and the
     # greedy trajectory — is bit-identical (repr literals parse back to
     # the same IEEE doubles).
-    view = f"__kcenter_v_{next(_VIEW_IDS)}"
-    v.createOrReplaceTempView(view)
-    try:
-        for _ in range(k - 1):
-            dist_sql = None
-            for _cid, cv, cn, _d in chosen:
-                arr = "array(" + ", ".join(f"{float(x)!r}D" for x in cv) + ")"
-                d = (
-                    "(1 - aggregate(zip_with(CAST(v AS ARRAY<DOUBLE>),"
-                    f" CAST({arr} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
-                    f" 0.0D, (acc, x) -> acc + x) / (nrm * {cn!r}D))"
-                )
-                dist_sql = d if dist_sql is None else f"least({dist_sql}, {d})"
-            ids = ", ".join(str(c[0]) for c in chosen)
-            far = spark.sql(
-                "SELECT max(struct(d, -vid AS neg, vid, v, nrm)) AS m"
-                f" FROM (SELECT vid, v, nrm, {dist_sql} AS d"
-                f" FROM {view} WHERE vid NOT IN ({ids}))"
-            ).collect()[0].m
-            if far is None:
-                raise ValueError(
-                    f"kcenter_coreset: k={k} exceeds corpus size {len(chosen)}"
-                )
-            chosen.append(
-                (int(far.vid), list(far.v), float(far.nrm), float(far.d))
+    for _ in range(k - 1):
+        dist_sql = None
+        for _cid, cv, cn, _d in chosen:
+            arr = "array(" + ", ".join(f"{float(x)!r}D" for x in cv) + ")"
+            d = (
+                "(1 - aggregate(zip_with(CAST(v AS ARRAY<DOUBLE>),"
+                f" CAST({arr} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
+                f" 0.0D, (acc, x) -> acc + x) / (nrm * {cn!r}D))"
             )
-    finally:
-        spark.catalog.dropTempView(view)
+            dist_sql = d if dist_sql is None else f"least({dist_sql}, {d})"
+        ids = ", ".join(str(c[0]) for c in chosen)
+        far = spark.sql(
+            "SELECT max(struct(d, -vid AS neg, vid, v, nrm)) AS m"
+            f" FROM (SELECT vid, v, nrm, {dist_sql} AS d"
+            f" FROM {{v}} WHERE vid NOT IN ({ids}))",
+            v=v,
+        ).collect()[0].m
+        if far is None:
+            raise ValueError(
+                f"kcenter_coreset: k={k} exceeds corpus size {len(chosen)}"
+            )
+        chosen.append(
+            (int(far.vid), list(far.v), float(far.nrm), float(far.d))
+        )
     rows = [(i, cid, d) for i, (cid, _v, _n, d) in enumerate(chosen)]
     return spark.createDataFrame(rows, "rank long, vec_id long, sel_dist double")
 
@@ -1663,35 +1643,31 @@ def mmr_topk(
     # arrays, the same left-nested greatest chain over the same fold
     # dot product; max_sim feeds the score as a named column (same
     # value, same ops), so the MMR trajectory is bit-identical.
-    view = f"__mmr_cand_{next(_VIEW_IDS)}"
-    cand.createOrReplaceTempView(view)
-    try:
-        for _ in range(k - 1):
-            ms_sql = None
-            for _cid, cv, cn, _r, _ms, _mm in chosen:
-                arr = "array(" + ", ".join(f"{float(x)!r}D" for x in cv) + ")"
-                s = (
-                    "(aggregate(zip_with(CAST(v AS ARRAY<DOUBLE>),"
-                    f" CAST({arr} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
-                    f" 0.0D, (acc, x) -> acc + x) / (nrm * {cn!r}D))"
-                )
-                ms_sql = s if ms_sql is None else f"greatest({ms_sql}, {s})"
-            ids = ", ".join(str(c[0]) for c in chosen)
-            pick = spark.sql(
-                "SELECT max(struct(sc, -vid AS neg, vid, v, nrm, rel, ms))"
-                " AS m FROM (SELECT vid, v, nrm, rel, ms,"
-                f" {lam!r}D * rel - {(1.0 - lam)!r}D * ms AS sc"
-                f" FROM (SELECT vid, v, nrm, rel, {ms_sql} AS ms"
-                f" FROM {view} WHERE vid NOT IN ({ids})))"
-            ).collect()[0].m
-            if pick is None:
-                break
-            chosen.append(
-                (int(pick.vid), list(pick.v), float(pick.nrm), float(pick.rel),
-                 float(pick.ms), float(pick.sc))
+    for _ in range(k - 1):
+        ms_sql = None
+        for _cid, cv, cn, _r, _ms, _mm in chosen:
+            arr = "array(" + ", ".join(f"{float(x)!r}D" for x in cv) + ")"
+            s = (
+                "(aggregate(zip_with(CAST(v AS ARRAY<DOUBLE>),"
+                f" CAST({arr} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
+                f" 0.0D, (acc, x) -> acc + x) / (nrm * {cn!r}D))"
             )
-    finally:
-        spark.catalog.dropTempView(view)
+            ms_sql = s if ms_sql is None else f"greatest({ms_sql}, {s})"
+        ids = ", ".join(str(c[0]) for c in chosen)
+        pick = spark.sql(
+            "SELECT max(struct(sc, -vid AS neg, vid, v, nrm, rel, ms))"
+            " AS m FROM (SELECT vid, v, nrm, rel, ms,"
+            f" {lam!r}D * rel - {(1.0 - lam)!r}D * ms AS sc"
+            f" FROM (SELECT vid, v, nrm, rel, {ms_sql} AS ms"
+            f" FROM {{cand}} WHERE vid NOT IN ({ids})))",
+            cand=cand,
+        ).collect()[0].m
+        if pick is None:
+            break
+        chosen.append(
+            (int(pick.vid), list(pick.v), float(pick.nrm), float(pick.rel),
+             float(pick.ms), float(pick.sc))
+        )
     rows = [
         (i + 1, cid, r, ms, mm)
         for i, (cid, _v, _n, r, ms, mm) in enumerate(chosen)
@@ -1739,8 +1715,6 @@ def knn_label_noise_frame(
     # bench run) — same operators in the same order (cast/norm → sign
     # bits → concat_ws bucket → in-bucket self-join → cosine → window
     # top-k → disagreement agg), so plans and results are bit-identical.
-    from .dedupe import _sql_lazy
-
     bit_sql = ",\n         ".join(
         "CASE WHEN "
         + _dot_sql("v", "array(" + ", ".join(_sql_double(w) for w in plane) + ")")
@@ -1752,13 +1726,12 @@ def knn_label_noise_frame(
     )
     vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
     dis = "count(CASE WHEN label_b <> label_a THEN 1 END)"
-    return _sql_lazy(
-        vectors,
-        lambda view: f"""
+    return vectors.sparkSession.sql(
+        f"""
 WITH v AS (
   SELECT {id_col} AS vid, {label_col} AS label, {vcast} AS v,
          sqrt({_dot_sql(vcast, vcast)}) AS nrm
-  FROM {view}
+  FROM {{vectors}}
 ),
 sig AS (
   SELECT vid, label, v, nrm,
@@ -1788,4 +1761,5 @@ SELECT vid AS vec_id, label_a AS label,
 FROM ranked
 WHERE rn <= {k}
 GROUP BY vid, label_a""",
+        vectors=vectors,
     )

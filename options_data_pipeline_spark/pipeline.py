@@ -144,14 +144,14 @@ def run_streaming(
         reference's current-state tab, S4, maintained incrementally by
         the idempotent foreachBatch merge in streaming/cdc_stream.py).
 
-    Stage 5 (optional, ``metrics_path``): a MetricsListener
+    Stage 5 (optional, ``metrics_path``): one MetricsListener
         (streaming/metrics.py) lands every stage's per-micro-batch
-        progress — and alert escalations — in the ``pipeline_metrics``
+        progress — and its alerts — in the ``pipeline_metrics``
         parquet table; each stage query is named so metric rows carry
     the stage label. The listener is session-scoped: callers that
-    restart pipelines in one session should
-    ``spark.streams.removeListener`` the returned queries' listener
-    (exposed as ``queries.metrics`` on the returned tuple subclass).
+    restart pipelines in one session should ``detach_metrics`` the
+    returned queries' listener (exposed as ``queries.metrics`` on the
+    returned tuple subclass).
 
     Returns the started queries. Restart recovery = the per-stage
     checkpointLocations (reference CheckpointManager, §2.8); every stage
@@ -162,19 +162,14 @@ def run_streaming(
     spark = tick_stream.sparkSession
     queries = []
     metrics_listener = None
-    alert_listener = None
     if metrics_path is not None:
-        from .streaming.listeners import AlertManager, PipelineListener
         from .streaming.metrics import attach_metrics
 
+        # ONE listener: the reference's alert channel rides the same
+        # table — per-stage silence heartbeats, stage failures and
+        # WARNING→CRITICAL escalations land as alert rows next to the
+        # latency rows
         metrics_listener = attach_metrics(spark, metrics_path)
-        # the reference's alert channel rides the same table: silence
-        # heartbeats, watermark-drop accounting, and WARNING→CRITICAL
-        # escalations land as alert rows next to the latency rows
-        alert_listener = PipelineListener(
-            alerts=AlertManager(on_fire=metrics_listener.alert_row)
-        )
-        spark.streams.addListener(alert_listener)
     # a downstream stage may start before its upstream writes anything —
     # the file stream source tolerates an empty dir but not a missing one
     os.makedirs(candle_path, exist_ok=True)
@@ -305,12 +300,10 @@ def run_streaming(
         )
     out = _Queries(queries)
     out.metrics = metrics_listener
-    out.alerts = alert_listener
     return out
 
 
 class _Queries(tuple):
-    """Started-queries tuple + the optional listener handles."""
+    """Started-queries tuple + the optional listener handle."""
 
     metrics = None
-    alerts = None

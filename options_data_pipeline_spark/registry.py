@@ -56,12 +56,6 @@ from .functions.similarity import (
     random_hyperplanes,
 )
 
-# monotonic suffix for driver-loop temp views — session-global names keyed
-# on id() can collide after GC (ADVICE r12 on the kmeans view)
-import itertools as _itertools
-
-_VIEW_IDS = _itertools.count()
-
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect)
 # ---------------------------------------------------------------------------
@@ -12092,31 +12086,27 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trajectory is bit-identical. Driver floats round-trip exactly:
     # repr() emits the shortest decimal that parses back to the same
     # IEEE double, and Spark's literal parser is correctly rounded.
-    view = f"__top_pc_cov_{next(_VIEW_IDS)}"
-    cov.createOrReplaceTempView(view)
     v = [0.125] * 64
     rows: list = []
     nrm = None
-    try:
-        for _ in range(8):
-            arr = ", ".join(f"{x!r}D" for x in v)
-            rows = spark.sql(
-                "WITH wt AS (SELECT di AS dim,"
-                " CAST(sum(CAST(round(c * element_at(array("
-                f"{arr}), dj + 1), 12) AS DECIMAL(32,12))) AS DOUBLE) AS w"
-                f" FROM {view} GROUP BY di),"
-                " nr AS (SELECT sqrt(CAST(sum(CAST(round(w * w, 12)"
-                " AS DECIMAL(32,12))) AS DOUBLE)) AS nrm FROM wt)"
-                " SELECT dim, round(wt.w / nr.nrm, 12) AS v, nr.nrm"
-                " FROM wt, nr"
-            ).collect()
-            nv = list(v)
-            for r in rows:
-                nv[r["dim"]] = r["v"]
-                nrm = r["nrm"]
-            v = nv
-    finally:
-        spark.catalog.dropTempView(view)
+    for _ in range(8):
+        arr = ", ".join(f"{x!r}D" for x in v)
+        rows = spark.sql(
+            "WITH wt AS (SELECT di AS dim,"
+            " CAST(sum(CAST(round(c * element_at(array("
+            f"{arr}), dj + 1), 12) AS DECIMAL(32,12))) AS DOUBLE) AS w"
+            " FROM {cov} GROUP BY di),"
+            " nr AS (SELECT sqrt(CAST(sum(CAST(round(w * w, 12)"
+            " AS DECIMAL(32,12))) AS DOUBLE)) AS nrm FROM wt)"
+            " SELECT dim, round(wt.w / nr.nrm, 12) AS v, nr.nrm"
+            " FROM wt, nr",
+            cov=cov,
+        ).collect()
+        nv = list(v)
+        for r in rows:
+            nv[r["dim"]] = r["v"]
+            nrm = r["nrm"]
+        v = nv
     trace = cov.filter(F.col("di") == F.col("dj")).agg(
         F.sum(F.round(F.col("c"), 12).cast("decimal(32,12)"))
         .cast("double")

@@ -14,6 +14,8 @@ only sets them when it owns the session.
 from __future__ import annotations
 
 import os
+import shlex
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -32,6 +34,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = cpu_count()
+    java_opts = os.environ.get(
+        "SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:ReservedCodeCacheSize=512m"
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -61,14 +66,13 @@ def get_spark(
         # and hot paths run interpreted/recompiling. Single-variable A/B on
         # the 233-query bench: 310.3 s -> 271.8 s (-12%); the per-position
         # cumulative delta is flat for the first ~40 queries and grows
-        # after — exactly the cache-full signature. On a cluster the same
-        # flag belongs in executor options for long-lived executors.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:ReservedCodeCacheSize=512m"
-            ),
-        )
+        # after — exactly the cache-full signature. Scope: local mode
+        # only. local[N] runs driver and executors in ONE JVM, so the
+        # driver option covers both, but only when this process launches
+        # that JVM — below, get_spark says so on stderr when the running
+        # JVM lacks the flags. On a cluster the same flag belongs in
+        # executor options for long-lived executors.
+        .config("spark.driver.extraJavaOptions", java_opts)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # write µs-typed parquet timestamps (not legacy INT96): what every
@@ -90,12 +94,27 @@ def get_spark(
         # env overrides beat explicit per-run extra_conf — make every such
         # run say so loudly, so a lingering probe knob can never skew a
         # committed BASELINE/BENCH artifact silently
-        import sys
-
         print(
             f"[session] SPARK_GRAFT_CONF active, overriding: {env_overrides}",
             file=sys.stderr,
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # extraJavaOptions is silently ignored when the JVM already exists
+    # (an earlier session, or a driver launched elsewhere): check the
+    # running JVM's launch command line. ProcessHandle, not the
+    # RuntimeMXBean: initializing the MXBean left ~0.4 MB more live heap
+    # for the life of the session.
+    requested = {**(extra_conf or {}), **env_overrides}.get(
+        "spark.driver.extraJavaOptions", java_opts
+    )
+    running = set(
+        spark._jvm.java.lang.ProcessHandle.current().info().arguments().orElse([])
+    )
+    missing = [f for f in shlex.split(requested) if f not in running]
+    if missing:
+        print(
+            f"[session] JVM already running without requested options: {missing}",
+            file=sys.stderr,
+        )
     return spark

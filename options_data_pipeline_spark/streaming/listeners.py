@@ -1,23 +1,17 @@
-"""Observability & alerting (reference AlertManager / heartbeat / latency
-reports → StreamingQueryListener).
+"""Alerting (reference AlertManager).
 
 Reference: dual-channel alerts (app log + system_log sheet,
-``modules/alerts/alert_manager.py:26-64``), 30 s tick-silence heartbeat
-(``ws_client.py:228-244``), 60 s latency percentile reports
-(``main.py:250-263``). Spark-first: a StreamingQueryListener reads each
-progress event — input rate, batch duration, watermark, and
-``numRowsDroppedByWatermark`` (the late-tick drop counter, W3) — and fans
-out to a log channel plus an optional side-output table, with the
-reference's WARNING→CRITICAL escalation on repeated trouble.
+``modules/alerts/alert_manager.py:26-64``) with WARNING→CRITICAL
+escalation on repeated trouble. The streaming pipeline's one listener,
+:class:`~.metrics.MetricsListener`, fires its silence heartbeats and
+stage failures through an :class:`AlertManager` whose third channel is
+the ``pipeline_metrics`` table.
 """
 
 from __future__ import annotations
 
-import json
 import logging
 from dataclasses import dataclass, field
-
-from pyspark.sql.streaming import StreamingQueryListener
 
 log = logging.getLogger("options_data_pipeline_spark.alerts")
 
@@ -31,14 +25,16 @@ class AlertManager:
 
     escalate_after: int = 3
     events: list[dict] = field(default_factory=list)
-    _streak: dict[str, int] = field(default_factory=dict)
+    # streaks are per (event, window): one stage's trouble never
+    # escalates or resolves another's
+    _streak: dict[tuple[str, str], int] = field(default_factory=dict)
     # optional channel 3: the pipeline_metrics table
     # (streaming/metrics.py MetricsListener.alert_row)
     on_fire: object = None
 
     def fire(self, level: str, event: str, window: str = "", details: str = "") -> dict:
-        streak = self._streak.get(event, 0) + 1
-        self._streak[event] = streak
+        streak = self._streak.get((event, window), 0) + 1
+        self._streak[(event, window)] = streak
         if streak >= self.escalate_after and level == "WARNING":
             level = "CRITICAL"
         record = {"level": level, "event": event, "window": window, "details": details}
@@ -50,41 +46,5 @@ class AlertManager:
             self.on_fire(record)
         return record
 
-    def resolve(self, event: str) -> None:
-        self._streak.pop(event, None)
-
-
-class PipelineListener(StreamingQueryListener):
-    """Progress listener: silence heartbeat + watermark-drop accounting."""
-
-    def __init__(self, alerts: AlertManager | None = None, silence_batches: int = 3):
-        self.alerts = alerts or AlertManager()
-        self.silence_batches = silence_batches
-        self._idle = 0
-        self.dropped_by_watermark = 0
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        self.alerts.resolve("STREAM_SILENT")
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = json.loads(event.progress.json)
-        self.progress.append(p)
-        rows = p.get("numInputRows", 0)
-        if rows == 0:
-            self._idle += 1
-            if self._idle >= self.silence_batches:
-                # heartbeat analogue: N empty triggers ≈ 30 s tick silence
-                self.alerts.fire("WARNING", "STREAM_SILENT", details=f"{self._idle} empty triggers")
-        else:
-            self._idle = 0
-            self.alerts.resolve("STREAM_SILENT")
-        for op in p.get("stateOperators", []):
-            self.dropped_by_watermark += op.get("numRowsDroppedByWatermark", 0)
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        if getattr(event, "exception", None):
-            self.alerts.fire("CRITICAL", "STREAM_FAILED", details=str(event.exception))
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
+    def resolve(self, event: str, window: str = "") -> None:
+        self._streak.pop((event, window), None)

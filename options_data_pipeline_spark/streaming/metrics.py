@@ -36,11 +36,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from .listeners import AlertManager
+
 METRICS_SCHEMA = (
     "ts timestamp, stage string, batch_id long, rows long, wall_ms long,"
     " state_rows long, watermark_lag_ms long, dropped_rows long,"
     " level string, event string, details string"
 )
+
+#: consecutive empty triggers of ONE stage that raise STREAM_SILENT — the
+#: reference's 30 s tick-silence heartbeat (``ws_client.py:228-244``) at
+#: trigger grain
+SILENCE_BATCHES = 3
 
 
 def _iso_ms(s: str | None) -> _dt.datetime | None:
@@ -50,17 +57,22 @@ def _iso_ms(s: str | None) -> _dt.datetime | None:
 
 
 class MetricsListener(StreamingQueryListener):
-    """Progress → ``pipeline_metrics`` parquet rows.
+    """Progress → ``pipeline_metrics`` parquet rows, plus the alert
+    channel: a stage's silence heartbeat and a query failure fire through
+    ``alerts`` (an :class:`AlertManager` whose ``on_fire`` lands the row
+    in the same table).
 
     ``stage`` is the query's name (set via ``queryName``; falls back to
     the query id), so one listener serves every stage of a multi-query
-    pipeline. Thread-safe: the listener bus may interleave events from
-    concurrent queries.
+    pipeline. Silence is counted per stage. Thread-safe: the listener bus
+    may interleave events from concurrent queries.
     """
 
     def __init__(self, spark: SparkSession, path: str, flush_interval_s: float = 2.0):
         self.spark = spark
         self.path = path
+        self.alerts = AlertManager(on_fire=self.alert_row)
+        self._idle: dict[str, int] = {}
         self._lock = threading.Lock()
         # serializes WRITE JOBS: two concurrent parquet appends to one
         # path share the committer's _temporary dir and corrupt each
@@ -125,12 +137,16 @@ class MetricsListener(StreamingQueryListener):
 
     # -- listener callbacks ------------------------------------------
     def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
+        stage = event.name or str(event.id)
+        self._idle.pop(stage, None)
+        self.alerts.resolve("STREAM_SILENT", stage)
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         import json as _json
 
         p = _json.loads(event.progress.json)
+        stage = p.get("name") or p.get("id", "unknown")
+        rows = int(p.get("numInputRows", 0))
         trigger_ts = _iso_ms(p.get("timestamp"))
         wm = _iso_ms((p.get("eventTime") or {}).get("watermark"))
         lag_ms = None
@@ -146,9 +162,9 @@ class MetricsListener(StreamingQueryListener):
         self._append(
             (
                 trigger_ts or _dt.datetime.utcnow(),
-                p.get("name") or p.get("id", "unknown"),
+                stage,
                 int(p.get("batchId", -1)),
-                int(p.get("numInputRows", 0)),
+                rows,
                 int((p.get("durationMs") or {}).get("triggerExecution", 0)),
                 state_rows,
                 lag_ms,
@@ -156,16 +172,22 @@ class MetricsListener(StreamingQueryListener):
                 None, None, None,
             )
         )
+        if rows:
+            self._idle.pop(stage, None)
+            self.alerts.resolve("STREAM_SILENT", stage)
+            return
+        idle = self._idle[stage] = self._idle.get(stage, 0) + 1
+        if idle >= SILENCE_BATCHES:
+            self.alerts.fire(
+                "WARNING", "STREAM_SILENT", window=stage,
+                details=f"{idle} empty triggers",
+            )
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         if getattr(event, "exception", None):
-            self.alert_row(
-                {
-                    "level": "CRITICAL",
-                    "event": "STREAM_FAILED",
-                    "window": "pipeline",
-                    "details": str(event.exception)[:500],
-                }
+            self.alerts.fire(
+                "CRITICAL", "STREAM_FAILED", window="pipeline",
+                details=str(event.exception)[:500],
             )
 
     def onQueryIdle(self, event) -> None:  # noqa: N802

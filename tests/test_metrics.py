@@ -54,6 +54,8 @@ def test_pipeline_populates_metrics_table(spark, tmpdir):
     spark.createDataFrame(rows, TICK_SCHEMA).write.parquet(tmpdir + "/src")
     stream = spark.readStream.schema(TICK_SCHEMA).parquet(tmpdir + "/src")
     metrics_path = tmpdir + "/pipeline_metrics"
+    listeners = spark._jsparkSession.streams().listListeners
+    n_before = len(listeners())
     queries = run_streaming(
         stream,
         tmpdir + "/candles",
@@ -62,6 +64,8 @@ def test_pipeline_populates_metrics_table(spark, tmpdir):
         metrics_path=metrics_path,
     )
     assert queries.metrics is not None
+    assert len(listeners()) == n_before + 1  # one listener for every stage
+
     def _stages():
         queries.metrics.flush()
         try:
@@ -84,8 +88,6 @@ def test_pipeline_populates_metrics_table(spark, tmpdir):
     finally:
         for q in queries:
             q.stop()
-        assert queries.alerts is not None  # alert channel rides the table
-        spark.streams.removeListener(queries.alerts)
         detach_metrics(spark, queries.metrics)
 
     m = read_metrics(spark, metrics_path)
@@ -119,6 +121,39 @@ def test_alert_rows_share_table_and_escalate(spark, tmpdir):
     assert all(r.event == "STREAM_SILENT" and r.stage == "candles" for r in rows)
     # metric columns are NULL on alert rows — the two kinds coexist
     assert all(r.batch_id is None and r.wall_ms is None for r in rows)
+
+
+def _progress(stage: str, batch_id: int, rows: int):
+    """A stand-in QueryProgressEvent: the listener reads only
+    ``event.progress.json``."""
+    import json
+    from types import SimpleNamespace
+
+    p = {"name": stage, "batchId": batch_id, "numInputRows": rows,
+         "timestamp": "2024-01-05T09:15:00.000Z"}
+    return SimpleNamespace(progress=SimpleNamespace(json=json.dumps(p)))
+
+
+def test_silence_is_counted_per_stage(spark, tmpdir):
+    """Stage `a` idles five triggers in a row while stage `b` keeps
+    delivering rows in between: `a` goes silent at its third empty
+    trigger and escalates at its third alert, `b` never alerts, and `b`'s
+    batches reset neither `a`'s count nor its escalation."""
+    path = tmpdir + "/pm"
+    listener = MetricsListener(spark, path)
+    for i in range(5):
+        listener.onQueryProgress(_progress("a", i, 0))
+        listener.onQueryProgress(_progress("b", i, 5))
+    listener.close()
+    alerts = (
+        read_metrics(spark, path).filter("level IS NOT NULL").orderBy("details")
+        .collect()
+    )
+    assert [(r.stage, r.event, r.level, r.details) for r in alerts] == [
+        ("a", "STREAM_SILENT", "WARNING", "3 empty triggers"),
+        ("a", "STREAM_SILENT", "WARNING", "4 empty triggers"),
+        ("a", "STREAM_SILENT", "CRITICAL", "5 empty triggers"),
+    ]
 
 
 def test_injected_failure_lands_critical_row(spark, tmpdir):
@@ -164,7 +199,7 @@ def test_injected_failure_lands_critical_row(spark, tmpdir):
         .filter("event = 'STREAM_FAILED'")
         .collect()
     )
-    assert rows and rows[0].level == "CRITICAL"
+    assert len(rows) == 1 and rows[0].level == "CRITICAL"
     assert rows[0].details  # the stage exception text rides along
 
 

@@ -42,6 +42,22 @@ def test_doremi_healthy_model_still_runs(spark):
     assert abs(sum(w.values()) - 1.0) < 1e-9
 
 
+def test_doremi_source_names_pass_through_sql_text(spark):
+    """Source names are quoted literals inside each iteration's SQL text:
+    a quote or a format brace in a name must not change the trajectory."""
+    from options_data_pipeline_spark.functions.doremi import doremi_trajectory
+
+    schema = "source string, tok string, p double"
+    rows = [("a", "x", 0.7), ("a", "y", 0.3), ("b", "x", 0.2), ("b", "y", 0.8)]
+    odd = {"a": "a{0}'s", "b": "b}{"}
+    w, _, _ = doremi_trajectory(spark.createDataFrame(rows, schema), iters=2)
+    w_odd, _, _ = doremi_trajectory(
+        spark.createDataFrame([(odd[s], t, p) for s, t, p in rows], schema),
+        iters=2,
+    )
+    assert w_odd == {odd[s]: x for s, x in w.items()}
+
+
 def test_repair_kmeans_index_empty_corpus_descriptive_error(spark, tmp_path):
     """A zero-row corpus flags every cell empty with no donor anywhere:
     repair raises a DESCRIPTIVE error, not max()-on-empty's bare

@@ -209,8 +209,6 @@ def main() -> None:
 
         if queries.metrics is not None:
             time.sleep(2)  # let in-flight bus events land in the buffer
-            if queries.alerts is not None:
-                spark.streams.removeListener(queries.alerts)
             detach_metrics(spark, queries.metrics)
         metrics_report = {
             r["stage"]: {
